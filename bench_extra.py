@@ -7,11 +7,11 @@ shuffle_partitions=max(cpus,8), same noop warm-up), but each query runs
 steal noise per BENCH/BASELINE.md's additive-steal argument), the number of
 Spark jobs each query fires is recorded (fixed per-job latency dominates at
 the sf0.1 input sizes — documents.parquet is 5k rows), and
-`.explain("formatted")` is captured to plans/r06/<query>_<tag>.txt.
+`.explain("formatted")` is captured to <plans-dir>/<query>_<tag>.txt.
 
 Usage:
     python bench_extra.py [--queries a,b,c] [--reps 3] [--tag before]
-                          [--no-plans]
+                          [--plans-dir plans/r07] [--no-plans]
 Prints one JSON line: {"queries": {name: [rep_secs...]}, "jobs": {name: n}}.
 """
 
@@ -42,9 +42,14 @@ def main() -> None:
                    help="comma list (default: the 13 headline queries)")
     p.add_argument("--reps", type=int, default=3)
     p.add_argument("--tag", default="before",
-                   help="plans/r06/<query>_<tag>.txt suffix")
+                   help="<plans-dir>/<query>_<tag>.txt suffix")
+    p.add_argument("--plans-dir", default=None,
+                   help="directory the formatted plans are written to, "
+                        "relative to this file (e.g. plans/r07)")
     p.add_argument("--no-plans", action="store_true")
     args = p.parse_args()
+    if not args.no_plans and args.plans_dir is None:
+        p.error("--plans-dir is required unless --no-plans is given")
 
     import __spark_entry__ as entrymod
     from xema_spark.session import get_spark
@@ -54,9 +59,10 @@ def main() -> None:
                       shuffle_partitions=max(CPUS, 8),
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "plans", "r06")
-    os.makedirs(plans_dir, exist_ok=True)
+    if not args.no_plans:
+        plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                 args.plans_dir)
+        os.makedirs(plans_dir, exist_ok=True)
     out: dict[str, list[float]] = {}
     jobs: dict[str, int] = {}
     tracker = spark.sparkContext.statusTracker()

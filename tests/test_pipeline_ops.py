@@ -83,6 +83,85 @@ class TestText:
         for d in fused:
             assert fused[d] == (lang[d], *rep[d]), d
 
+    def test_ngram_kernel_edge_cases_match_python_reference(self, spark):
+        """Every token n-gram operator (the text.token_grams kernel behind
+        repetition_signals, lang_repetition_table, token_ngrams and
+        text_chunks) against a pure-Python slice/join reference: NULL,
+        empty, whitespace-only and sub-n docs; tabs and runs of spaces;
+        regex metacharacters; non-ASCII incl. a supplementary-plane char
+        (the scan steps by UTF-16 unit); one 10k-token doc."""
+        import re
+        from collections import Counter
+        from decimal import ROUND_HALF_UP, Decimal
+
+        big = " ".join(f"w{i % 37}" + ("\U0001F600" if i % 11 == 0 else "")
+                       for i in range(10000))
+        texts = [None, "", "   ", " \t\n ", "a", "a b", "a b c d",
+                 "a\tb  c\n\nd \t e f g  a\tb c d e",
+                 ". ( ) [ ] * + ? \\ | . ( ) [ ] * + ? \\ |",
+                 "a.b a.b (x) (x) [y]* [y]* a|b a|b \\d \\d ^$ ^$",
+                 "Ünïcödé straße naïve \U0001F600 x Ünïcödé straße naïve "
+                 "\U0001F600 x",
+                 "\U0001F600 a " * 6 + " ".join(f"u{i}" for i in range(60)),
+                 "the cat sat on the mat and it was the cat " * 3,
+                 big]
+        df = spark.createDataFrame(list(enumerate(texts)),
+                                   "doc_id int, text string")
+
+        def toks(s):
+            return [t for t in re.split(r"[ \t\n\x0b\f\r]+", (s or "").lower())
+                    if t]
+
+        def grams(ts, n):
+            return [" ".join(ts[i:i + n]) for i in range(len(ts) - n + 1)]
+
+        def rnd6(x):
+            return float(Decimal(repr(x)).quantize(Decimal("1e-6"),
+                                                   ROUND_HALF_UP))
+
+        def rep(s):
+            ts, n_chars = toks(s), max(len(s or ""), 1)
+            top = Counter(grams(ts, 2))
+            top_mass = max((c * 2 ** 32 + len(g) for g, c in top.items()),
+                           default=0)
+            dup_mass = sum(c * len(g) for g, c in Counter(grams(ts, 5)).items()
+                           if c > 1)
+            return (rnd6(min(1.0, (top_mass >> 32) * (top_mass & 0xFFFFFFFF)
+                             / n_chars)),
+                    rnd6(min(1.0, dup_mass / n_chars)))
+
+        def lang(s):
+            ts = toks(s)
+            if not ts:
+                return "und"
+            scores = {lg: sum(t in ws for t in ts) / len(ts)
+                      for lg, ws in text._STOPWORDS.items()}
+            best = max(scores.values())
+            return "und" if best <= 0.05 else next(
+                lg for lg, v in scores.items() if v == best)
+
+        want_rep = {i: rep(s) for i, s in enumerate(texts)}
+        got_rep = {r["doc_id"]: (r["top_ngram_frac"], r["dup_ngram_frac"])
+                   for r in text.repetition_signals(df, "doc_id").collect()}
+        assert got_rep == want_rep
+        got_lr = {r["doc_id"]: (r["lang"], r["top_ngram_frac"],
+                                r["dup_ngram_frac"])
+                  for r in text.lang_repetition_table(df, "doc_id").collect()}
+        assert got_lr == {i: (lang(s), *want_rep[i])
+                          for i, s in enumerate(texts)}
+        rows = df.select(
+            "doc_id", dedup.token_ngrams(F.col("text"), 5).alias("g5"),
+            dedup.token_ngrams(F.col("text"), 1).alias("g1"),
+            dedup.text_chunks(F.col("text"), 4).alias("c4"),
+            dedup.text_chunks(F.col("text"), 1).alias("c1")).collect()
+        for r in rows:
+            ts = toks(texts[r["doc_id"]])
+            assert r["g5"] == list(dict.fromkeys(grams(ts, 5))), r["doc_id"]
+            assert r["g1"] == list(dict.fromkeys(ts)), r["doc_id"]
+            assert r["c4"] == [" ".join(ts[i:i + 4])
+                               for i in range(0, len(ts), 4)], r["doc_id"]
+            assert r["c1"] == ts, r["doc_id"]
+
     def test_pii_scrub(self, spark):
         df = spark.createDataFrame([
             (1, "mail me at bob@example.com or at 10.1.2.3 ssn 123-45-6789"),

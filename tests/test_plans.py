@@ -140,9 +140,38 @@ def test_repetition_signals_is_explode_groupby(spark):
     from xema_spark import text
 
     df = spark.createDataFrame([(1, "a b c d e f")], ["doc_id", "text"])
-    plan = plan_of(text.repetition_signals(df, "doc_id"))
+    out = text.repetition_signals(df, "doc_id")
+    plan = plan_of(out)
     assert "HashAggregate" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    _assert_lambda_free_grams(out)
+
+
+def _assert_lambda_free_grams(df):
+    """The n-gram projection is one regexp_extract_all scan per family over
+    an already-projected token string: no lambda re-tokenising the doc per
+    gram position (the O(tokens^2) transform(sequence) shape), and every
+    aggregate a HashAggregate (no struct max forcing SortAggregate)."""
+    ext = plan_of(df, "extended")
+    optimized = ext[ext.index("== Optimized Logical Plan =="):
+                    ext.index("== Physical Plan ==")]
+    gram_lines = [ln for ln in optimized.splitlines()
+                  if "regexp_extract_all" in ln]
+    assert gram_lines
+    assert not any("lambdafunction" in ln or "split(" in ln
+                   for ln in gram_lines)
+    assert "transform(" not in optimized and "sequence(" not in optimized
+    assert "SortAggregate" not in ext
+    assert plan_of(df).count("HashAggregate (") == 4
+
+
+def test_lang_repetition_table_is_lambda_free_hash_aggregate(spark):
+    """Same guard for the fused language + repetition operator that
+    pipeline.curate gates on."""
+    from xema_spark import text
+
+    df = spark.createDataFrame([(1, "a b c d e f")], ["doc_id", "text"])
+    _assert_lambda_free_grams(text.lang_repetition_table(df, "doc_id"))
 
 
 def test_pii_scrub_is_shuffle_free(spark):

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from xema_spark.text import normalize_text, tokens
+from xema_spark.text import normalize_text, token_grams, tokens
 
 # Mersenne prime 2^31-1: the permutation field for the PORTABLE minhash
 # flavor. a,b < 2^31 and hashes reduced below 2^31 keep every intermediate
@@ -240,17 +240,18 @@ def pairs_from_signatures(sig: DataFrame, k: int = 32, bands: int = 8,
     text, so its within-batch pairs start here)."""
     banded = band_buckets(sig, k, bands, hash_fn)
     grouped = (banded.groupBy("band", "bucket")
-               .agg(F.collect_list("doc").alias("docs"))
+               .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
                .filter((F.size("docs") > 1) & (F.size("docs") <= max_bucket)))
     return (grouped.select(F.explode(_ordered_pairs(F.col("docs"))).alias("p"))
             .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
             .distinct())
 
 
-def _ordered_pairs(docs: Column) -> Column:
+def _ordered_pairs(srt: Column) -> Column:
     """All (a<b) pairs within a bucket as array<struct<a,b>> — flatMap via
-    nested transform, no Python."""
-    srt = F.array_sort(docs)
+    nested transform, no Python. `srt` must already be sorted: callers
+    aggregate it as array_sort(collect_list(..)), so the bucket is sorted
+    once, not once per lambda reference (O(B^2) sorts)."""
     idx = F.sequence(F.lit(1), F.size(srt))
     return F.flatten(F.transform(
         idx,
@@ -581,20 +582,13 @@ def minhash_dedupe(df: DataFrame, id_col: str, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 def token_ngrams(col: Column, n: int = 5) -> Column:
-    """Distinct space-joined token n-grams of a text column.
-
-    Guarded for short docs: Spark's sequence(1, size-n+1) infers step -1
-    when size < n (the winnow short-text hazard, text.py) — the CASE arm
-    returns an empty array instead. One transform over one split: O(tokens)
-    per row, no shuffle.
-    """
-    toks = tokens(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "))
+    """Distinct space-joined token n-grams of a text column: one
+    text.token_grams regex scan over the tokens joined once, so O(tokens)
+    per row with no lambda and no shuffle. Docs with fewer than n tokens
+    (and NULL text) give []."""
+    grams = token_grams(F.array_join(tokens(col), " "), n)
     return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(
-            F.array().cast("array<string>")))
+        F.coalesce(grams, F.array().cast("array<string>")))
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
@@ -740,7 +734,8 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str = "text",
     blocked = sig.withColumn(
         "block", F.shiftrightunsigned("sim", total_bits - prefix_bits))
     grouped = (blocked.groupBy("block")
-               .agg(F.collect_list(F.struct(F.col("doc"), F.col("sim"))).alias("ds"))
+               .agg(F.array_sort(F.collect_list(
+                   F.struct(F.col("doc"), F.col("sim")))).alias("ds"))
                .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket)))
     pairs = grouped.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p")) \
         .select(F.col("p.a.doc").alias("doc_a"), F.col("p.b.doc").alias("doc_b"),
@@ -758,18 +753,14 @@ def text_chunks(col: Column, chunk_tokens: int = 4,
                 sep: str | None = None) -> Column:
     """Split text into passages: on `sep` when the corpus has natural
     paragraph breaks (e.g. r"\\n\\n"), else fixed non-overlapping
-    chunk_tokens-token windows — the fallback for flat text. The final
-    window may be shorter. Empty/whitespace-only text yields an empty
-    array (guarded: sequence(1, 0) would infer step -1, the winnow
-    short-text hazard, text.py:265)."""
+    chunk_tokens-token windows — the fallback for flat text, one
+    text.token_grams scan over the tokens joined once. The final window
+    may be shorter. Empty/whitespace-only/NULL text yields []."""
     if sep is not None:
         return F.filter(F.split(col, sep), lambda p: p != "")
-    toks = tokens(col)
-    chunks = F.transform(
-        F.sequence(F.lit(1), F.size(toks), F.lit(chunk_tokens)),
-        lambda i: F.array_join(F.slice(toks, i, chunk_tokens), " "))
-    return F.when(F.size(toks) > 0, chunks).otherwise(
-        F.array().cast("array<string>"))
+    chunks = token_grams(F.array_join(tokens(col), " "), chunk_tokens,
+                         overlapping=False)
+    return F.coalesce(chunks, F.array().cast("array<string>"))
 
 
 def paragraph_dedupe(df: DataFrame, id_col: str, text_col: str = "text",

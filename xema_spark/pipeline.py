@@ -5,10 +5,9 @@ expensive stages see progressively fewer rows.
 
 Scan discipline (the 100 TB shape):
 - validation + quality ratios fuse into ONE projection over the input scan
-  (all pure Column expressions); language-ID defaults to the measured-faster
-  explode->one-groupBy table variant (see curate's lang_strategy);
-- repetition signals (the only multi-pass stage: explode n-grams -> groupBy)
-  run on filter SURVIVORS only;
+  (all pure Column expressions);
+- language-ID and both repetition n-gram families explode in ONE tagged
+  pass (text.lang_repetition_table: two Exchanges, one join-back);
 - exact dedupe is one window on the survivors' content hash;
 - the MinHash chain runs on the exact-deduped set, and its Jaccard verifier
   re-shingles candidate docs only (dedup.ngram_jaccard's semi-join
@@ -45,7 +44,6 @@ def curate(
     max_shingles: int = 512,
     scrub_pii: bool = False,
     cache_survivors: bool = True,
-    lang_strategy: str = "table",
     benchmark: DataFrame | None = None,
     decontaminate_ngram: int = 5,
     decontaminate_min_hits: int = 1,
@@ -97,44 +95,26 @@ def curate(
     else:
         base = df.select(id_col, text_col, *carry)
 
-    # quality ratios + language id + repetition signals. Two shapes for the
-    # token-level stages:
-    # - 'fused': per-row HOF language argmax in the same projection (zero
-    #   shuffle, but each language score re-filters the token array through
-    #   the interpreted higher-order functions), repetition joined after;
-    # - 'table' (default): tokens AND both repetition n-gram families
-    #   explode in ONE tagged pass through text.lang_repetition_table —
-    #   two Exchanges + one id-keyed join for the whole lang+repetition
-    #   block, versus the five Exchanges + three joins of composing
-    #   lang_id_table and repetition_signals separately (guide §2.4).
-    #   Per-doc values are corpus-independent, so computing repetition
-    #   before the quality/language filter instead of after it changes no
-    #   surviving row — the conjunction of per-row gates is order-free
-    #   (pinned by the pipeline_curate oracle).
-    # Measured on the curate path (SCALING.md "curate language stage"):
-    # 'table' wins ~2x at both 5k and 100k docs — the 5-language HOF
-    # re-evaluation costs more than the token shuffle, the same lesson as
-    # minhash/simhash — so it is the default; 'fused' remains for
-    # shuffle-constrained deployments.
+    # quality ratios + language id + repetition signals: tokens AND both
+    # repetition n-gram families explode in ONE tagged pass through
+    # text.lang_repetition_table — two Exchanges + one id-keyed join for
+    # the whole lang+repetition block, versus the five Exchanges + three
+    # joins of composing lang_id_table and repetition_signals separately
+    # (guide §2.4). Per-doc values are corpus-independent, so computing
+    # repetition before the quality/language filter instead of after it
+    # changes no surviving row — the conjunction of per-row gates is
+    # order-free (pinned by the pipeline_curate oracle).
     keep = F.col("q_alpha_ratio") >= F.lit(float(min_alpha_ratio))
     if langs:
         keep = keep & F.col("lang").isin(*langs)
-    rep_keep = ((F.col("top_ngram_frac") <= F.lit(float(max_top_ngram_frac)))
-                & (F.col("dup_ngram_frac") <= F.lit(float(max_dup_ngram_frac))))
-    if lang_strategy == "table":
-        q = (T.quality_features(base, text_col)
-             .join(T.lang_repetition_table(base, id_col, text_col), id_col)
-             .filter(keep & rep_keep)
-             .select(id_col, text_col, "lang", "q_alpha_ratio",
-                     "top_ngram_frac", "dup_ngram_frac", *carry))
-    else:
-        q = (T.quality_features(base, text_col)
-             .withColumn("lang", T.lang_id(F.col(text_col)))
-             .filter(keep)
-             .select(id_col, text_col, "lang", "q_alpha_ratio", *carry))
-        rep = T.repetition_signals(q.select(id_col, text_col), id_col,
-                                   text_col)
-        q = q.join(rep, id_col).filter(rep_keep)
+    keep = (keep
+            & (F.col("top_ngram_frac") <= F.lit(float(max_top_ngram_frac)))
+            & (F.col("dup_ngram_frac") <= F.lit(float(max_dup_ngram_frac))))
+    q = (T.quality_features(base, text_col)
+         .join(T.lang_repetition_table(base, id_col, text_col), id_col)
+         .filter(keep)
+         .select(id_col, text_col, "lang", "q_alpha_ratio",
+                 "top_ngram_frac", "dup_ngram_frac", *carry))
 
     # When the ONLY multi-reference consumer is the near-dup stage, the
     # boundary can sit AFTER the (single-reference) exact-dedupe window

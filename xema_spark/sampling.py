@@ -167,23 +167,17 @@ def _hashed_gram_counts(df: DataFrame, id_col: str, text_col: str,
                         n_buckets: int, hash_fn: str,
                         salt: str) -> DataFrame:
     """(doc, bucket, c): per-doc hashed unigram+bigram counts — the DSIR
-    feature map (Xie et al., NeurIPS 2023: bag of hashed n-grams). One
-    projection + one explode + ONE partial-aggregated groupBy; bigrams are
-    O(1) element_at over the token array (arrays are indexed, unlike UTF8
-    substr), guarded for < 2 tokens (sequence(1, 0) would count DOWN).
-    NULL-text docs emit no rows (split/filter propagate NULL, explode
-    drops it) — callers left-join and coalesce."""
-    from xema_spark.text import tokens
+    feature map (Xie et al., NeurIPS 2023: bag of hashed n-grams). Tokens
+    are projected once; bigrams are one lambda-free text.token_grams scan
+    over them joined (empty for < 2 tokens); one explode + ONE
+    partial-aggregated groupBy. NULL-text docs emit no rows (tokens
+    propagate NULL, explode drops it) — callers left-join and coalesce."""
+    from xema_spark.text import token_grams, tokens
 
-    toks = tokens(F.col(text_col))
-    bi = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.concat_ws(" ", F.element_at(toks, i),
-                                          F.element_at(toks, i + 1)))
-    ).otherwise(F.array().cast("array<string>"))
-    ex = (df.select(F.col(id_col).alias("doc"),
-                    F.explode(F.concat(toks, bi)).alias("g"))
+    toks = df.select(F.col(id_col).alias("doc"),
+                     tokens(F.col(text_col)).alias("_t"))
+    bi = token_grams(F.array_join("_t", " "), 2)
+    ex = (toks.select("doc", F.explode(F.concat("_t", bi)).alias("g"))
           .select("doc", F.pmod(_bucket31(F.col("g"), salt, hash_fn),
                                 F.lit(n_buckets)).alias("bucket")))
     return ex.groupBy("doc", "bucket").agg(F.count(F.lit(1)).alias("c"))

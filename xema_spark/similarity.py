@@ -363,8 +363,9 @@ def cosine_near_dups(df: DataFrame, dim: int, threshold: float = 0.95,
     from xema_spark.dedup import _ordered_pairs
 
     grouped = (banded.groupBy("band", "key")
-               .agg(F.collect_list(F.struct(F.col("doc"), F.col("vec"),
-                                            F.col("__n"))).alias("ds"))
+               .agg(F.array_sort(F.collect_list(
+                   F.struct(F.col("doc"), F.col("vec"), F.col("__n"))))
+                    .alias("ds"))
                .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket)))
     pairs = (grouped.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p"))
              .select(F.col("p.a.doc").alias("doc_a"), F.col("p.b.doc").alias("doc_b"),
@@ -426,8 +427,8 @@ def semantic_dedupe(df: DataFrame, n_cells: int = 16,
     # (measured 1.15x on the sf0.1 pair stage, SCALING.md "SemDeDup")
     staged = assigned.withColumn("_n", norm(F.col("vec")))
     grouped = (staged.groupBy("cell")
-               .agg(F.collect_list(
-                   F.struct(F.col("doc"), F.col("vec"), F.col("_n")))
+               .agg(F.array_sort(F.collect_list(
+                   F.struct(F.col("doc"), F.col("vec"), F.col("_n"))))
                     .alias("ds"))
                .filter((F.size("ds") > 1) & (F.size("ds") <= max_cell)))
     pairs = (grouped.select(F.explode(_ordered_pairs(F.col("ds"))).alias("p"))

@@ -8,6 +8,8 @@ n_chars)` table but parameterized on the text column.
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # A BPE-ish word/number/symbol segmentation (letters run | digits run |
@@ -137,15 +139,26 @@ def lang_id_table(df: DataFrame, id_col: str, text_col: str = "text",
         aggs.append(F.count(F.when(F.col("__t").isin(words), True))
                     .alias(f"__h_{lang}"))
     per = toks.groupBy(id_col).agg(*aggs)
-    # greatest(__n, 1) keeps the division ANSI-safe for zero-token docs;
-    # the __n == 0 branch below decides those rows before scores matter
-    denom = F.greatest(F.col("__n"), F.lit(1))
-    scores = {lang: F.col(f"__h_{lang}") / denom for lang in _STOPWORDS}
-    m = F.greatest(*scores.values())
-    pick = F.when((F.col("__n") == 0) | (m <= min_score), F.lit("und"))
-    for lang in _STOPWORDS:  # first max wins, same tie-break as lang_id()
-        pick = pick.when(scores[lang] == m, F.lit(lang))
+    pick = _lang_pick(F.col("__n"),
+                      {lang: F.col(f"__h_{lang}") for lang in _STOPWORDS},
+                      min_score)
     return per.select(id_col, pick.alias(out_col))
+
+
+def _lang_pick(n_tok: Column, hits: dict[str, Column],
+               min_score: float) -> Column:
+    """Language argmax over per-language stopword hit counts: 'und' for
+    zero-token docs or when no score clears min_score, else the first
+    language (in _STOPWORDS order) with the max score — lang_id()'s
+    tie-break. greatest(n_tok, 1) keeps the division ANSI-safe; the
+    n_tok == 0 arm decides those rows before the scores matter."""
+    denom = F.greatest(n_tok, F.lit(1))
+    scores = {lang: hits[lang] / denom for lang in _STOPWORDS}
+    m = F.greatest(*scores.values())
+    pick = F.when((n_tok == 0) | (m <= min_score), F.lit("und"))
+    for lang in _STOPWORDS:
+        pick = pick.when(scores[lang] == m, F.lit(lang))
+    return pick
 
 
 def top_tokens(df: DataFrame, text_col: str = "text", k: int = 50,
@@ -177,6 +190,94 @@ def fingerprint64(col: Column) -> Column:
     return F.xxhash64(normalize_text(col))
 
 
+def token_grams(joined: Column, n: int, overlapping: bool = True) -> Column:
+    """Token n-grams of a SPACE-JOINED token string (`array_join(toks, ' ')`
+    over `tokens()` output, whose tokens never contain a space), in order,
+    as one regexp_extract_all scan — no lambda, so the tokens are never
+    re-derived per gram position:
+      overlapping=True  — every n-gram, positionally identical to
+        concat_ws(' ', slice(toks, i, n)) for i = 1..size-n+1; a lookahead
+        anchored at each token start captures the n tokens ahead. The
+        anchor is "at ^ or after a space", not "not after a non-space":
+        the scan steps by UTF-16 unit, and the negated form also fires
+        between the two halves of a supplementary-plane character;
+      overlapping=False — consecutive non-overlapping n-token windows
+        (the last may be shorter), identical to slice(toks, i, n) for
+        i = 1, 1+n, 1+2n, ...
+    Fewer than n tokens (or none) give []; NULL gives NULL."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    if overlapping:
+        pat, group = rf"(?:^|(?<= ))(?=([^ ]++(?: [^ ]++){{{n - 1}}}))", 1
+    else:
+        pat, group = rf"[^ ]++(?: [^ ]++){{0,{n - 1}}}", 0
+    return F.regexp_extract_all(joined, F.lit(pat), group)
+
+
+def _item_counts(df: DataFrame, id_col: str, text_col: str, top_n: int,
+                 dup_n: int, with_tokens: bool) -> DataFrame:
+    """(doc, n_chars, tag, item, cnt): the tagged-explode core of the
+    repetition and language operators. Tag 0 = tokens (only when
+    with_tokens), 1 = top_n-grams, 2 = dup_n-grams; every family of a doc
+    explodes in ONE posexplode_outer of the concatenated arrays, and the tag
+    is read off the position against the family boundaries. Tokens are
+    projected once and every gram family is one token_grams scan over their
+    joined string. A doc with no items keeps one NULL-tag, NULL-item row, so
+    callers get their output row without a join-back. n_chars is
+    functionally determined by doc, so carrying it through the grouping keys
+    adds no cardinality."""
+    toks = df.select(F.col(id_col).alias("doc"),
+                     F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
+                     tokens(F.col(text_col)).alias("_t"))
+    joined = toks.select("doc", "n_chars", "_t",
+                         F.array_join("_t", " ").alias("_j"))
+    tags = [0, 1, 2] if with_tokens else [1, 2]
+    arrays = joined.select(
+        "doc", "n_chars", *([F.col("_t").alias("_f0")] if with_tokens else []),
+        token_grams(F.col("_j"), top_n).alias("_f1"),
+        token_grams(F.col("_j"), dup_n).alias("_f2"))
+    # family t ends at position _e{t} (cumulative sizes), projected BEFORE
+    # the generator so only these ints, never the arrays, ride along every
+    # exploded row
+    ends = accumulate(F.size(f"_f{t}") for t in tags)
+    tagged = (arrays.select("doc", "n_chars",
+                            *[e.alias(f"_e{t}") for t, e in zip(tags, ends)],
+                            F.concat(*[f"_f{t}" for t in tags]).alias("_g"))
+              .select("doc", "n_chars", *[f"_e{t}" for t in tags],
+                      F.posexplode_outer("_g").alias("pos", "item")))
+    # a NULL pos (no items) matches no arm -> NULL tag
+    tag = F.when(F.col("pos") < F.col(f"_e{tags[0]}"), tags[0])
+    for t in tags[1:]:
+        tag = tag.when(F.col("pos") < F.col(f"_e{t}"), t)
+    return (tagged.groupBy("doc", "n_chars", tag.alias("tag"), "item")
+            .agg(F.count(F.lit(1)).alias("cnt")))
+
+
+def _repetition_aggs() -> list[Column]:
+    """top_mass / dup_mass over _item_counts rows. The most frequent
+    top_n-gram's mass is cnt*len of max(cnt << 32 | len): the max over
+    (cnt, len) pairs, and since the mass depends on nothing else no gram
+    tie-break can change it (a gram's length and a doc's gram count are both
+    < 2^31, so the packed halves neither overlap nor overflow). A
+    fixed-width long keeps the aggregate a HashAggregate (a struct max
+    would force Sort + SortAggregate)."""
+    top = F.max(F.when(F.col("tag") == 1,
+                       F.shiftleft("cnt", 32) + F.length("item")))
+    return [
+        (F.shiftright(top, 32) * top.bitwiseAND(F.lit(0xFFFFFFFF)))
+        .cast("long").alias("top_mass"),
+        F.sum(F.when((F.col("tag") == 2) & (F.col("cnt") > 1),
+                     F.col("cnt") * F.length("item"))
+              .otherwise(F.lit(0))).cast("long").alias("dup_mass")]
+
+
+def _frac(mass: str) -> Column:
+    """mass / n_chars capped at 1.0, rounded to 6 (0 for no mass)."""
+    return F.round(
+        F.least(F.lit(1.0), F.coalesce(F.col(mass), F.lit(0)).cast("double")
+                / F.greatest(F.col("n_chars"), F.lit(1))), 6)
+
+
 def repetition_signals(df: DataFrame, id_col: str, text_col: str = "text",
                        top_n: int = 2, dup_n: int = 5) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021, §A1.1 —
@@ -191,54 +292,17 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str = "text",
     buys no extra filtering power.
 
     Scale shape: BOTH n-gram families explode in ONE pass as (doc, tag,
-    gram) rows — tag 0 = top_n-grams, tag 1 = dup_n-grams, so the two
-    masses share one groupBy(doc, tag, gram) count and one groupBy(doc)
-    rollup (two Exchanges total, versus four Exchanges + two joins when
-    each family aggregated separately — guide §2.4; the per-(doc, gram)
-    counts and the final masses are bit-identical). The
-    most-frequent gram is max(struct(cnt, len, gram)) — one aggregate, a
-    deterministic (cnt, len, gram) tie-break, no window. Map-side partial
-    aggregation bounds partitions by doc size, never a per-row
-    higher-order recomputation (the minhash lesson)."""
-    toks = tokens(F.col(text_col))
-    n_tokens = F.size(toks)
-
-    def grams(n: int, tag: int) -> Column:
-        return F.when(
-            n_tokens >= n,
-            F.transform(F.sequence(F.lit(1), n_tokens - (n - 1)),
-                        lambda i: F.struct(
-                            F.lit(tag).alias("tag"),
-                            F.concat_ws(" ", F.slice(toks, i, n))
-                            .alias("gram"))),
-        ).otherwise(F.array().cast(
-            "array<struct<tag:int,gram:string>>"))
-
-    # explode_outer + n_chars carried through the grouping keys (n_chars is
-    # functionally determined by doc): zero-gram docs keep their output row
-    # without a join-back, so the operator is one scan and two Exchanges
-    base = df.select(F.col(id_col).alias("doc"),
-                     F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
-                     F.concat(grams(top_n, 0), grams(dup_n, 1)).alias("_g"))
-    cnt = (base.select("doc", "n_chars", F.explode_outer("_g").alias("g"))
-           .groupBy("doc", "n_chars", F.col("g.tag").alias("tag"),
-                    F.col("g.gram").alias("gram"))
-           .agg(F.count(F.lit(1)).alias("cnt")))
-    m = F.max(F.when(F.col("tag") == 0,
-                     F.struct(F.col("cnt"), F.length("gram").alias("glen"),
-                              F.col("gram"))))
-    per = (cnt.groupBy("doc", "n_chars").agg(
-        (m.getField("cnt") * m.getField("glen")).cast("long")
-        .alias("top_mass"),
-        F.sum(F.when((F.col("tag") == 1) & (F.col("cnt") > 1),
-                     F.col("cnt") * F.length("gram"))
-              .otherwise(F.lit(0))).cast("long").alias("dup_mass")))
-    frac = lambda mass: F.round(
-        F.least(F.lit(1.0), F.coalesce(mass, F.lit(0)).cast("double")
-                / F.greatest(F.col("n_chars"), F.lit(1))), 6)
+    gram) rows (_item_counts), so the two masses share one
+    groupBy(doc, tag, gram) count and one groupBy(doc) rollup — two
+    Exchanges, both HashAggregate (guide §2.4). The grams come from the
+    lambda-free token_grams kernel over tokens projected once: no per-row
+    higher-order recomputation (the minhash lesson). The most-frequent
+    gram's mass is one long max (_repetition_aggs), no window."""
+    per = (_item_counts(df, id_col, text_col, top_n, dup_n, False)
+           .groupBy("doc", "n_chars").agg(*_repetition_aggs()))
     return per.select(F.col("doc").alias(id_col),
-                      frac(F.col("top_mass")).alias("top_ngram_frac"),
-                      frac(F.col("dup_mass")).alias("dup_ngram_frac"))
+                      _frac("top_mass").alias("top_ngram_frac"),
+                      _frac("dup_mass").alias("dup_ngram_frac"))
 
 
 def lang_repetition_table(df: DataFrame, id_col: str, text_col: str = "text",
@@ -247,77 +311,34 @@ def lang_repetition_table(df: DataFrame, id_col: str, text_col: str = "text",
                           min_score: float = 0.05) -> DataFrame:
     """lang_id_table + repetition_signals fused into ONE explode + two
     groupBys: tokens (tag 0), top_n-grams (tag 1) and dup_n-grams (tag 2)
-    explode together as (doc, tag, item) rows, one groupBy(doc, tag, item)
-    counts them, one groupBy(doc) rolls up the language argmax AND both
-    repetition masses. Returns one row per doc:
+    explode together as (doc, tag, item) rows (_item_counts), one
+    groupBy(doc, tag, item) counts them, one groupBy(doc) rolls up the
+    language argmax AND both repetition masses. Returns one row per doc:
     (id_col, lang_col, top_ngram_frac, dup_ngram_frac).
 
-    Shares the exact score/tie-break/rounding formulas with the two
-    standalone operators (pinned by tests), so a pipeline that gates on
-    language and repetition — pipeline.curate's hot path — pays two
-    Exchanges and one join-back instead of the five Exchanges and three
-    joins of composing them separately (guide §2.4). Per-language hits
-    aggregate as sum(cnt · isin) over the counted distinct tokens, which
-    equals the per-token count. One output row per distinct id (unique-id
-    corpus contract, as lang_id_table)."""
-    toks = tokens(F.col(text_col))
-    n_tokens = F.size(toks)
-
-    def grams(n: int, tag: int) -> Column:
-        return F.when(
-            n_tokens >= n,
-            F.transform(F.sequence(F.lit(1), n_tokens - (n - 1)),
-                        lambda i: F.struct(
-                            F.lit(tag).alias("tag"),
-                            F.concat_ws(" ", F.slice(toks, i, n))
-                            .alias("item"))),
-        ).otherwise(F.array().cast("array<struct<tag:int,item:string>>"))
-
-    tok_structs = F.transform(
-        toks, lambda t: F.struct(F.lit(0).alias("tag"), t.alias("item")))
-    # n_chars is functionally determined by doc, so carrying it through the
-    # grouping keys adds no cardinality and removes the join-back a separate
-    # (doc, n_chars) frame would need — the operator is exactly two
-    # Exchanges and one scan
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.coalesce(F.length(text_col), F.lit(0)).alias("n_chars"),
-        F.concat(tok_structs, grams(top_n, 1), grams(dup_n, 2)).alias("_g"))
-    cnt = (base.select("doc", "n_chars", F.explode_outer("_g").alias("g"))
-           .groupBy("doc", "n_chars", F.col("g.tag").alias("tag"),
-                    F.col("g.item").alias("item"))
-           .agg(F.count(F.lit(1)).alias("cnt")))
+    Shares the score/tie-break/rounding formulas with the two standalone
+    operators (_lang_pick, _repetition_aggs, _frac; pinned by tests), so a
+    pipeline that gates on language and repetition — pipeline.curate's hot
+    path — pays two Exchanges and one join-back instead of the five
+    Exchanges and three joins of composing them separately (guide §2.4).
+    Per-language hits aggregate as sum(cnt · isin) over the counted
+    distinct tokens, which equals the per-token count. One output row per
+    distinct id (unique-id corpus contract, as lang_id_table)."""
     is_tok = F.col("tag") == 0
     aggs = [F.sum(F.when(is_tok, F.col("cnt"))).alias("__n")]
     for lang, words in _STOPWORDS.items():
         aggs.append(F.sum(F.when(is_tok & F.col("item").isin(words),
                                  F.col("cnt"))).alias(f"__h_{lang}"))
-    m_top = F.max(F.when(F.col("tag") == 1,
-                         F.struct(F.col("cnt"), F.length("item").alias("glen"),
-                                  F.col("item"))))
-    aggs.append((m_top.getField("cnt") * m_top.getField("glen")).cast("long")
-                .alias("top_mass"))
-    aggs.append(F.sum(F.when((F.col("tag") == 2) & (F.col("cnt") > 1),
-                             F.col("cnt") * F.length("item"))
-                      .otherwise(F.lit(0))).cast("long").alias("dup_mass"))
-    per = cnt.groupBy("doc", "n_chars").agg(*aggs)
-    # language pick: identical formulas/tie-break to lang_id_table. A
-    # zero-token doc survives the explode_outer as one NULL-item row whose
-    # token sums are NULL -> coalesce to 0 -> 'und', masses 0.
-    n_tok = F.coalesce(F.col("__n"), F.lit(0))
-    denom = F.greatest(n_tok, F.lit(1))
-    scores = {lang: F.coalesce(F.col(f"__h_{lang}"), F.lit(0)) / denom
-              for lang in _STOPWORDS}
-    m = F.greatest(*scores.values())
-    pick = F.when((n_tok == 0) | (m <= min_score), F.lit("und"))
-    for lang in _STOPWORDS:
-        pick = pick.when(scores[lang] == m, F.lit(lang))
-    frac = lambda mass: F.round(
-        F.least(F.lit(1.0), F.coalesce(mass, F.lit(0)).cast("double")
-                / F.greatest(F.col("n_chars"), F.lit(1))), 6)
+    per = (_item_counts(df, id_col, text_col, top_n, dup_n, True)
+           .groupBy("doc", "n_chars").agg(*aggs, *_repetition_aggs()))
+    # a zero-token doc survives as one NULL-item row whose token sums are
+    # NULL -> coalesce to 0 -> 'und', masses 0
+    pick = _lang_pick(F.coalesce(F.col("__n"), F.lit(0)),
+                      {lang: F.coalesce(F.col(f"__h_{lang}"), F.lit(0))
+                       for lang in _STOPWORDS}, min_score)
     return per.select(F.col("doc").alias(id_col), pick.alias(lang_col),
-                      frac(F.col("top_mass")).alias("top_ngram_frac"),
-                      frac(F.col("dup_mass")).alias("dup_ngram_frac"))
+                      _frac("top_mass").alias("top_ngram_frac"),
+                      _frac("dup_mass").alias("dup_ngram_frac"))
 
 
 # PII patterns kept to regex constructs with identical semantics in Java
@@ -472,9 +493,9 @@ def lm_score(df: DataFrame, id_col: str, text_col: str = "text",
     ppl = exp(avg_nll). Docs with < 2 tokens return null scores (no
     transitions to judge), flagged scoreable=false.
 
-    Scale shape (100 TB): bigram extraction is one projection (O(1)
-    element_at over the token array — arrays are indexed, unlike UTF8
-    substr). The corpus is scanned three times — bigram counting, the
+    Scale shape (100 TB): bigram extraction is one projection (one
+    lambda-free token_grams scan; each bigram splits at its only space).
+    The corpus is scanned three times — bigram counting, the
     scoring probe, and the vocabulary distinct-count (exact countDistinct
     for oracle parity; a real deployment can swap approx_count_distinct) —
     NOT four: the context count c_ctx(w1) is the w1-marginal of the
@@ -486,17 +507,10 @@ def lm_score(df: DataFrame, id_col: str, text_col: str = "text",
     Self-trained means the join always hits: no smoothing-path branch in
     the hot loop.
     """
-    toks = tokens(F.col(text_col))
-    big = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("w1"),
-                        F.element_at(toks, i + 1).alias("w2")))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    ex = (df.select(F.col(id_col).alias("doc"), big.alias("_b"))
-          .select("doc", F.explode("_b").alias("bg"))
-          .select("doc", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")))
+    big = token_grams(F.array_join(tokens(F.col(text_col)), " "), 2)
+    ex = (df.select(F.col(id_col).alias("doc"), F.explode(big).alias("bg"))
+          .select("doc", F.substring_index("bg", " ", 1).alias("w1"),
+                  F.substring_index("bg", " ", -1).alias("w2")))
     bg_counts = ex.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     ctx_counts = bg_counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (df.select(F.explode(tokens(F.col(text_col))).alias("t"))
