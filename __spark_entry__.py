@@ -527,8 +527,9 @@ def _q_decontaminate_semantic(spark, sf_dir):
 
 def _q_dedup_components(spark, sf_dir):
     """Transitive near-dup grouping: consecutive-doc 3-gram Jaccard edges
-    (threshold 0.28) -> connected components by min-label propagation.
-    The DuckDB oracle recomputes reachability with a recursive CTE."""
+    (threshold 0.28) -> dedup.connected_components (driver union-find at
+    this size). The DuckDB oracle recomputes reachability with a recursive
+    CTE."""
     d = _docs(spark, sf_dir, "doc_id", "text")
     sh = d.select("doc_id", dedup.shingles(F.col("text"), n=3, max_shingles=4096).alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -571,8 +572,9 @@ def _q_dedup_best_keeper(spark, sf_dir):
 def _q_dedup_components_star(spark, sf_dir):
     """Same component problem through the large-star/small-star formulation
     (dedup.connected_components_star, O(log n) rounds): identical labeling,
-    identical recursive-CTE oracle — the scale-path variant is driver-checked
-    against the same ground truth as the label-propagation default."""
+    identical recursive-CTE oracle — the fallback connected_components takes
+    past CC_DRIVER_BOUND is checked against the same ground truth as the
+    driver union-find."""
     d = _docs(spark, sf_dir, "doc_id", "text")
     sh = d.select("doc_id", dedup.shingles(F.col("text"), n=3, max_shingles=4096).alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -583,7 +585,7 @@ def _q_dedup_components_star(spark, sf_dir):
            / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)))
     edges = j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard")) \
         .filter(F.col("jaccard") >= 0.28)
-    return dedup.connected_components(edges, algorithm="star")
+    return dedup.connected_components_star(edges)
 
 
 def _q_cast_union(spark, sf_dir):
@@ -3361,7 +3363,7 @@ def oracle_sql() -> dict[str, str]:
         "pipeline_curate": _pipeline_oracle_sql(),
     }
     # variant queries share their base query's ground truth: the star CC
-    # formulation must produce the identical labeling, and the IVF
+    # fallback must produce the driver union-find's labeling, and the IVF
     # broadcast-centroid plan the identical top-k — one oracle checks both
     # plan shapes
     out["dedup_components_star"] = out["dedup_components"]

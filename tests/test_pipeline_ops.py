@@ -474,46 +474,66 @@ def test_ivf_centroid_selection(spark):
         similarity.ivf_topk(emb.filter(F.col("vec_id") < 0), q, n_cells=4)
 
 
-def test_star_cc_equivalent_to_label_propagation(spark):
-    """large-star/small-star must produce the same (doc -> component-min)
-    labeling as min-label propagation on random graphs, and converge in
-    O(log n) rounds on a chain where label propagation needs O(diameter)."""
-    import random
+def _reference_components(edges):
+    """Pure-Python reachability: node -> minimum id of its component."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for n in adj[todo.pop()] - comp:
+                comp.add(n)
+                todo.append(n)
+        out.update(dict.fromkeys(comp, min(comp)))
+    return out
 
-    from xema_spark import dedup
+
+def _random_graph():
+    import random
 
     rnd = random.Random(7)
     edges = {(rnd.randrange(60), rnd.randrange(60)) for _ in range(80)}
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    lbl = {r["doc"]: r["component"]
-           for r in dedup.connected_components(pairs, algorithm="label").collect()}
-    star = {r["doc"]: r["component"]
-            for r in dedup.connected_components(pairs, algorithm="star").collect()}
-    assert lbl == star
+    return [(a, b) for a, b in edges if a != b]
 
-    # chain 0-1-2-...-63: diameter 63, star must finish in O(log n) rounds
+
+@pytest.mark.parametrize("edges", [
+    pytest.param(_random_graph(), id="random60"),
+    # diameter 63: star must finish in O(log n) rounds, well under 12
+    pytest.param([(i, i + 1) for i in range(63)], id="chain64"),
+    # docs 3 and 4 appear in self-pairs: each still gets its own row
+    # (ADVICE r3: star once derived its node set after filtering u != v)
+    pytest.param([(1, 2), (3, 3), (2, 1), (4, 4), (4, 5)], id="self_loop_only"),
+    # the engine's own 'doc-XXXXXXXX' format: no long cast, lexicographic minima
+    pytest.param([("doc-b", "doc-a"), ("doc-b", "doc-c"), ("x", "y")],
+                 id="string_ids"),
+])
+def test_cc_paths_match_reference(spark, monkeypatch, edges):
+    """The driver union-find, the star fallback, and connected_components
+    forced onto the fallback (bound 0) all give the reference labeling."""
+    want = _reference_components(edges)
+    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+
+    def labels(df):
+        return {r["doc"]: r["component"] for r in df.collect()}
+
+    assert labels(dedup.connected_components(pairs)) == want
+    assert labels(dedup.connected_components_star(pairs, max_iter=12)) == want
+    monkeypatch.setattr(dedup, "CC_DRIVER_BOUND", 0)
+    assert labels(dedup.connected_components(pairs)) == want
+
+
+def test_star_cc_raises_without_fixed_point(spark):
+    """A chain too long for max_iter rounds must raise, not return a
+    partial labelling."""
     chain = spark.createDataFrame([(i, i + 1) for i in range(63)],
                                   ["doc_a", "doc_b"])
-    comp = {r["doc"]: r["component"]
-            for r in dedup.connected_components_star(chain, max_iter=12).collect()}
-    assert set(comp) == set(range(64))
-    assert set(comp.values()) == {0}
-
-
-def test_star_cc_self_loop_only_doc(spark):
-    """A doc appearing ONLY in self-pairs must still get a (doc, doc)
-    component row from BOTH variants — drop-in equivalence (ADVICE r3:
-    star derived its node set after filtering u!=v, losing such docs)."""
-    from xema_spark import dedup
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (3, 3), (2, 1), (4, 4), (4, 5)], ["doc_a", "doc_b"])
-    want = {1: 1, 2: 1, 3: 3, 4: 4, 5: 4}
-    for algo in ("label", "star"):
-        got = {r["doc"]: r["component"]
-               for r in dedup.connected_components(pairs, algorithm=algo).collect()}
-        assert got == want, algo
+    with pytest.raises(RuntimeError, match="no fixed point"):
+        dedup.connected_components_star(chain, max_iter=2)
 
 
 def test_ivf_trained_centroids_improve_recall(spark):
@@ -564,22 +584,6 @@ def test_top_tokens_take_ordered(spark):
         text.top_tokens(df, k=2).explain("formatted")
     plan = buf.getvalue()
     assert "TakeOrderedAndProject" in plan
-
-
-def test_star_cc_string_ids(spark):
-    """algorithm='star' must be a drop-in for string doc ids (the engine's
-    own 'doc-XXXXXXXX' format) — no long cast, lexicographic minima, same
-    labeling as the label variant."""
-    pairs = spark.createDataFrame(
-        [("doc-b", "doc-a"), ("doc-b", "doc-c"), ("x", "y")],
-        ["doc_a", "doc_b"])
-    star = {r["doc"]: r["component"]
-            for r in dedup.connected_components(pairs, algorithm="star").collect()}
-    lbl = {r["doc"]: r["component"]
-           for r in dedup.connected_components(pairs, algorithm="label").collect()}
-    assert star == lbl
-    assert star["doc-a"] == star["doc-b"] == star["doc-c"] == "doc-a"
-    assert star["x"] == star["y"] == "x"
 
 
 def test_decontaminate_flags_overlap_and_keeps_zero_gram_docs(spark):

@@ -294,24 +294,23 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str,
 #: Near-dup pair sets are LSH-collision-sized — orders of magnitude smaller
 #: than the corpus — so even at the 100 TB shape they are usually a few
 #: hundred MB of ids; 2M pairs collect to ~100-200 MB on the driver (well
-#: under driver.maxResultSize). Past the bound the distributed algorithms
-#: take over unchanged. Rationale (guide §1.2/§5): each distributed round
-#: is 2-4 Spark jobs of fixed scheduler latency, and the label/star loops
-#: need several rounds plus one extra to detect the fixed point — a bounded
-#: driver-side aggregate (like the centroid draws and strata counts
-#: elsewhere) replaces ~10-30 jobs with one.
+#: under driver.maxResultSize). Past the bound connected_components_star
+#: takes over. Rationale (guide §1.2/§5): each star round is two Spark jobs
+#: of fixed scheduler latency and a run needs several rounds, the last one
+#: only to confirm the fixed point — a bounded driver-side aggregate (like
+#: the centroid draws and strata counts elsewhere) replaces them with one.
 CC_DRIVER_BOUND = 2_000_000
 
 
-def _driver_components(pairs: DataFrame, a_col: str, b_col: str,
-                       bound: int) -> DataFrame | None:
+def _driver_components(pairs: DataFrame, a_col: str,
+                       b_col: str) -> DataFrame | None:
     """Bounded driver-side union-find: None when the pair set exceeds
-    `bound` (caller falls back to the distributed algorithm). Labels every
-    node with the minimum id reachable from it — identical output contract
-    to the label/star variants (ids compare in Spark's binary string order;
-    ASCII ids and numeric ids order identically in Python)."""
-    rows = pairs.select(a_col, b_col).limit(bound + 1).collect()
-    if len(rows) > bound:
+    CC_DRIVER_BOUND (caller falls back to connected_components_star).
+    Labels every node with the minimum id reachable from it — identical
+    output contract to the star path (ids compare in Spark's binary string
+    order; ASCII ids and numeric ids order identically in Python)."""
+    rows = pairs.select(a_col, b_col).limit(CC_DRIVER_BOUND + 1).collect()
+    if len(rows) > CC_DRIVER_BOUND:
         return None
     parent: dict = {}
 
@@ -348,79 +347,24 @@ def _driver_components(pairs: DataFrame, a_col: str, b_col: str,
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
-                         b_col: str = "doc_b", max_iter: int = 50,
-                         algorithm: str = "auto",
-                         driver_bound: int = CC_DRIVER_BOUND) -> DataFrame:
+                         b_col: str = "doc_b") -> DataFrame:
     """Transitive near-dup grouping: label every vertex of the pair graph
     with the minimum id reachable from it. Returns (doc, component).
 
-    algorithm='auto' (default): pair sets within `driver_bound` rows are
-    collected once and solved with union-find on the driver (pair graphs
-    are LSH-collision-sized, not corpus-sized — a bounded driver aggregate
-    like the centroid/strata collects elsewhere), replacing the 10-30
-    fixed-latency jobs of the iterative variants with one; larger graphs
-    fall through to 'star' (O(log n) rounds) automatically.
-
-    algorithm='label' (oracle-checked): min-label propagation,
-    driver-coordinated — each round is one join + partial-aggregated groupBy
-    over the PAIR set (which is orders of magnitude smaller than the corpus
-    — only docs that collided in LSH), converging in O(component diameter)
-    rounds; near-dup clusters are shallow in practice (boilerplate
-    families), so this terminates in a handful of rounds.
-
-    algorithm='star': the large-star/small-star formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
-    rounds on adversarially long chains; see connected_components_star.
-
-    Both variants piggyback their convergence check on the SAME job that
-    materializes the round (df.observe + localCheckpoint) instead of firing
-    a separate per-round count action, so a k-round run launches k jobs,
-    not 2k. localCheckpoint truncates the growing lineage so round N
-    doesn't replay rounds 1..N-1."""
-    if algorithm == "auto":
-        fast = _driver_components(pairs, a_col, b_col, driver_bound)
-        if fast is not None:
-            return fast
-        return connected_components_star(pairs, a_col, b_col, max_iter)
-    if algorithm == "star":
-        return connected_components_star(pairs, a_col, b_col, max_iter)
-    from pyspark.sql import Observation
-
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))) \
-        .distinct().localCheckpoint()
-    labels = edges.select(F.col("src").alias("node")).distinct() \
-        .withColumn("lbl", F.col("node"))
-    for i in range(max_iter):
-        nbr = (edges.join(labels, edges["src"] == labels["node"])
-               .select(F.col("dst").alias("node"), F.col("lbl")))
-        # EXACT convergence: the round's own label row is tagged (is_old) so
-        # the same groupBy that computes the new min-label also recovers the
-        # previous one (each node contributes exactly one old row), and the
-        # observed metric is the count of nodes whose label actually changed
-        # this round — zero changes IS a fixed point, no hash-collision
-        # caveat (ADVICE r3: a sum-of-hash checksum could cancel). The count
-        # still rides the localCheckpoint materialization job via observe,
-        # so a k-round run stays k jobs.
-        obs = Observation(f"cc_label_{i}")
-        merged = (nbr.withColumn("is_old", F.lit(False))
-                  .unionByName(labels.select("node", "lbl")
-                               .withColumn("is_old", F.lit(True))))
-        labels = (merged.groupBy("node")
-                  .agg(F.min("lbl").alias("lbl"),
-                       F.max(F.when(F.col("is_old"), F.col("lbl"))).alias("_prev"))
-                  .observe(obs, F.count_if(F.col("lbl") != F.col("_prev")).alias("changed"))
-                  .drop("_prev")
-                  .localCheckpoint())
-        if obs.get["changed"] == 0:
-            break
-    return labels.select(F.col("node").alias("doc"), F.col("lbl").alias("component"))
+    Pair sets of at most CC_DRIVER_BOUND rows are collected once and solved
+    with union-find on the driver (pair graphs are LSH-collision-sized, not
+    corpus-sized — a bounded driver aggregate like the centroid/strata
+    collects elsewhere). Larger graphs run connected_components_star on the
+    cluster (O(log n) rounds, exact stop)."""
+    fast = _driver_components(pairs, a_col, b_col)
+    if fast is not None:
+        return fast
+    return connected_components_star(pairs, a_col, b_col)
 
 
 def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
                               b_col: str = "doc_b",
-                              max_iter: int = 30) -> DataFrame:
+                              max_iter: int = 50) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al., SoCC'14):
     alternating rounds rewire every node toward its neighborhood minimum —
     large-star hangs each node's strictly-larger neighbors under the local
@@ -428,66 +372,60 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
     set converges to a star forest (node -> component min) in O(log n)
     rounds even on a chain, where plain label propagation needs O(n).
 
-    Each round is two groupBy(min)+join passes over the EDGE set only;
-    convergence is detected from an order-independent checksum
-    (count + two independently-seeded sum(xxhash64) digests) observed on
-    the same job that materializes the round's edges — no extra per-round
-    action. The edge set only shrinks/rewires toward minima (monotone), so
-    an unchanged checksum across a full round indicates a fixed point with
-    overwhelming probability (a premature stop needs changed edges whose
-    hash-delta sums cancel under BOTH seeds at equal count, ~2^-62 per
-    round — not a proof; the label variant's change-count is exact)."""
+    Each round is two groupBy(min)+join passes over the EDGE set only. The
+    stop rule is EXACT: each half-round observes, on the same job that
+    materializes its edges, how many edges it rewired (large-star: emitted
+    (v, m) with m != u; small-star: oriented (a, b) with b != m). When both
+    counts are 0 neither half changed the edge set, so every non-root node
+    has exactly one neighbor, a smaller node with no smaller neighbor — a
+    star forest rooted at the component minima. Raises RuntimeError when
+    `max_iter` rounds pass without that proof rather than return a partial
+    labelling."""
     from pyspark.sql import Observation
 
-    # ids keep their native type (string doc ids order lexicographically,
-    # exactly as the label variant's F.min does) — casting to long would
-    # crash under ANSI on the engine's own 'doc-XXXXXXXX' id format.
-    # The node set comes from the UNFILTERED pair frame: a doc appearing
-    # only in self-pairs must still get its (doc, doc) output row, matching
-    # algorithm='label' drop-in (ADVICE r3)
+    # ids keep their native type (string doc ids order lexicographically)
+    # — casting to long would crash under ANSI on the engine's own
+    # 'doc-XXXXXXXX' id format. The node set comes from the UNFILTERED pair
+    # frame: a doc appearing only in self-pairs must still get its
+    # (doc, doc) output row, as on the driver path (ADVICE r3)
     raw = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     nodes = (raw.select(F.col("u").alias("node"))
              .unionByName(raw.select(F.col("v").alias("node")))
              .distinct().localCheckpoint())
     edges = (raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint())
 
-    prev = None
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # large-star: per node u over the UNDIRECTED neighborhood,
         # m = min(N(u) ∪ {u}); emit (v, m) for every neighbor v > u
         und = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (und.groupBy("u").agg(F.min("v").alias("mv"))
                 .select("u", F.least("mv", F.col("u")).alias("m")))
+        large = Observation()
         edges = (und.filter(F.col("v") > F.col("u"))
                  .join(mins, "u")
+                 .observe(large, F.count_if(F.col("m") != F.col("u")).alias("n"))
                  .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v")).distinct().localCheckpoint())
+                 .distinct().localCheckpoint())
         # small-star: orient each edge large->small; per node a,
         # m = min(smaller-neighbors ∪ {a}); re-parent those neighbors and a
         oriented = edges.select(F.greatest("u", "v").alias("a"),
                                 F.least("u", "v").alias("b"))
         minsS = (oriented.groupBy("a").agg(F.min("b").alias("m")))
-        obs = Observation(f"cc_star_{i}")
+        small = Observation()
         edges = (oriented.join(minsS, "a")
+                 .observe(small, F.count_if(F.col("b") != F.col("m")).alias("n"))
                  .select(F.col("b").alias("u"), F.col("m").alias("v"))
                  .unionByName(minsS.select(F.col("a").alias("u"),
                                            F.col("m").alias("v")))
                  .filter(F.col("u") != F.col("v")).distinct()
-                 .observe(obs,
-                          F.count(F.lit(1)).alias("n"),
-                          # mod-reduced terms keep the sums ANSI-overflow-free;
-                          # two independent seeds shrink the cancelling-delta
-                          # window to ~2^-62 per round
-                          F.sum(F.pmod(F.xxhash64("u", "v"),
-                                       F.lit((1 << 31) - 1))).alias("h"),
-                          F.sum(F.pmod(F.xxhash64(F.lit("s2"), "u", "v"),
-                                       F.lit((1 << 31) - 1))).alias("h2"))
                  .localCheckpoint())
-        cur = (obs.get["n"], obs.get["h"], obs.get["h2"])
-        if cur == prev:
+        if large.get["n"] == 0 and small.get["n"] == 0:
             break
-        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixed point after {max_iter} "
+            "rounds; raise max_iter")
     # final edges point node -> component min; roots have no outgoing edge
     return (nodes.join(edges.withColumnRenamed("u", "node"), "node", "left")
             .select(F.col("node").alias("doc"),
@@ -495,28 +433,25 @@ def connected_components_star(pairs: DataFrame, a_col: str = "doc_a",
 
 
 def near_dup_losers(dups: DataFrame, id_col: str = "doc_id",
-                    transitive: bool = True,
-                    algorithm: str = "auto") -> DataFrame:
+                    transitive: bool = True) -> DataFrame:
     """Doc ids to DROP given a verified near-dup pair frame (doc_a, doc_b):
-    transitive=True groups pairs into connected components ('auto' by
-    default — bounded driver-side union-find, star fallback on graphs past
-    the bound) and keeps each component's minimum
-    id; transitive=False is per-pair pruning (drop the greater id of every
-    verified pair — cheaper, no iterative rounds, but splits A~B~C when
-    A!~C). The ONE place this policy lives — minhash_dedupe and
-    pipeline.curate both derive their survivor sets from it."""
+    transitive=True groups pairs with connected_components (driver
+    union-find, star fallback past CC_DRIVER_BOUND) and keeps each
+    component's minimum id; transitive=False is per-pair pruning (drop the
+    greater id of every verified pair — cheaper, no iterative rounds, but
+    splits A~B~C when A!~C). The ONE place this policy lives —
+    minhash_dedupe and pipeline.curate both derive their survivor sets
+    from it."""
     if transitive:
-        comp = connected_components(dups, algorithm=algorithm)
+        comp = connected_components(dups)
         return comp.filter(F.col("doc") != F.col("component")) \
             .select(F.col("doc").alias(id_col))
     return dups.select(F.greatest("doc_a", "doc_b").alias(id_col)).distinct()
 
 
-
 def near_dup_losers_by(dups: DataFrame, scores: DataFrame,
                        id_col: str = "doc_id", score_col: str = "score",
-                       transitive: bool = True,
-                       algorithm: str = "auto") -> DataFrame:
+                       transitive: bool = True) -> DataFrame:
     """near_dup_losers with a QUALITY-AWARE keeper: each duplicate group
     keeps its BEST-scoring member (ties -> smallest id) instead of the
     smallest id — the policy a curation pipeline actually wants (keep the
@@ -536,7 +471,7 @@ def near_dup_losers_by(dups: DataFrame, scores: DataFrame,
     sc = scores.select(F.col(id_col).alias("doc"),
                        F.col(score_col).cast("double").alias("_s"))
     if transitive:
-        comp = connected_components(dups, algorithm=algorithm)
+        comp = connected_components(dups)
         j = (comp.join(sc, "doc", "left")
              .withColumn("_s", F.coalesce("_s", F.lit(float("-inf")))))
         # keeper = min(struct(-score, doc)): highest score, then lowest id
